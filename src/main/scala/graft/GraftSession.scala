@@ -72,9 +72,19 @@ object GraftSession {
       (cores * 4).toString,
     "spark.sql.files.minPartitionNum" -> cores.toString)
 
+  /** The core count a `cores` setting names: a positive integer, or `*`
+    * for every available processor (Spark's `local[*]`). Anything else
+    * throws — a typo must not silently size the session. */
+  def coreCount(cores: String): Int = cores match {
+    case "*" => Runtime.getRuntime.availableProcessors
+    case n => n.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
+      s"SPARK_GRAFT_CPUS must be a positive integer or '*', got '$n'"))
+  }
+
   def create(cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"),
              appName: String = "graft",
              profile: String = sys.env.getOrElse("GRAFT_PROFILE", "interactive")): SparkSession = {
+    val nCores = coreCount(cores)
     val base = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
@@ -86,7 +96,7 @@ object GraftSession {
       // wave) with identical final parallelism. On a cluster this is
       // RAISED (or superseded by coalescePartitions.initialPartitionNum
       // under batch); nothing here encodes fixture scale.
-      .config("spark.sql.shuffle.partitions", math.min(cores.toIntOption.getOrElse(8), 8))
+      .config("spark.sql.shuffle.partitions", math.min(nCores, 8))
     val builder = profileConfs(profile).foldLeft(base) { case (b, (k, v)) => b.config(k, v) }
       // Scan fan-out floor follows the shuffle width (8), not core count:
       // by default Spark pads SMALL inputs to defaultParallelism splits
@@ -117,6 +127,14 @@ object GraftSession {
       // table count into a footer sweep.
       .config("spark.sql.parquet.aggregatePushdown", "true")
       .config("spark.ui.enabled", "false")
+      // Cap the driver's status store. With the UI off nothing here reads
+      // it, yet by default it keeps the last 1000 SQL executions, jobs and
+      // stages and 100k tasks — so a resident server's heap grows with
+      // every statement it serves, faster the higher its throughput.
+      .config("spark.sql.ui.retainedExecutions", "20")
+      .config("spark.ui.retainedJobs", "20")
+      .config("spark.ui.retainedStages", "20")
+      .config("spark.ui.retainedTasks", "200")
       // Shuffle/spill scratch on the memory-backed filesystem when one is
       // mounted — the local-mode analogue of a memory-medium emptyDir for
       // shuffle locality on k8s. Spill safety is unchanged (a 100 TB
@@ -130,7 +148,7 @@ object GraftSession {
     // batch profile: width scales with cores + AQE sizing (overrides the
     // interactive dispatch-floor constants above — see batchScaleConfs)
     val scaled = (if (profile == "batch")
-      batchScaleConfs(math.max(1, cores.toIntOption.getOrElse(8)))
+      batchScaleConfs(nCores)
     else Map.empty[String, String]).foldLeft(builder) {
       case (b, (k, v)) => b.config(k, v)
     }

@@ -493,7 +493,7 @@ final class Engine(val spark: SparkSession, val rootDir: String) {
       catalog.get(c) // existence check
       val (before, after, published) = catalog.optimize(c, target, zcols)
       // same content-neutral skip as the auto-OPTIMIZE hook
-      fastForwardViewTails(c, published)
+      published.foreach(fastForwardViewTails(c, _))
       val how = if (zcols.isEmpty) "" else s" z-ordered by [${zcols.mkString(",")}]"
       Done(s"optimized $c: $before file(s) -> $after file(s)$how " +
         s"(version ${catalog.currentVersion(c)})")

@@ -1270,8 +1270,25 @@ final class Catalog(val spark: SparkSession, rootDir: String) {
     if (!Files.exists(clusterFile(name))) Nil
     else Files.readString(clusterFile(name)).split("\t").toSeq.filter(_.nonEmpty)
 
+  /** OPTIMIZE: rewrite a merge set of the current version's data files
+    * with the container's clustering (pk range, or the persisted `USING`
+    * policy) and publish it copy-on-write ([[tryCommitCow]]): every other
+    * file is hard-linked, so commit-time index maintenance carries the
+    * settled files' `src=` index parts by name and recomputes only the
+    * merged ones.
+    *
+    * Explicit `OPTIMIZE c [n] [USING …]` merges every file (which also
+    * reclaims the bytes of dropped columns). The auto-OPTIMIZE commit
+    * hook passes `smallTierOnly`: the merge set is then
+    * [[Catalog.smallTier]], and a set of fewer than 2 files publishes
+    * nothing — so a point commit never rewrites the settled large files.
+    *
+    * Returns (files before, files after, the published version), the
+    * version None when nothing was merged.
+    */
   def optimize(name: String, targetFiles: Option[Int] = None,
-      zorderBy: Seq[String] = Nil): (Int, Int, Int) = {
+      zorderBy: Seq[String] = Nil,
+      smallTierOnly: Boolean = false): (Int, Int, Option[Int]) = {
     import org.apache.spark.sql.functions.col
     targetFiles.foreach(t =>
       require(t >= 1, s"OPTIMIZE $name: target file count must be >= 1, got $t"))
@@ -1314,7 +1331,7 @@ final class Catalog(val spark: SparkSession, rootDir: String) {
     // CAS like any commit — NOT overwrite(): optimize rewrites content it
     // has already read, so publishing above a concurrently-committed
     // version would silently drop that commit's rows. Losing the claim
-    // re-reads the new base and compacts THAT.
+    // re-reads the new base and re-selects its merge set.
     var attempts = 0
     var done = false
     var before = 0
@@ -1334,8 +1351,17 @@ final class Catalog(val spark: SparkSession, rootDir: String) {
         adoptPublished(name)
       }
       stuckAt = base
-      val df = if (base > 0) readVersion(name, base) else read(name)
-      before = if (base > 0) versionFiles(name, base).size else 0
+      val files = if (base > 0) versionFiles(name, base) else Nil
+      before = files.size
+      val merge =
+        if (smallTierOnly) Catalog.smallTier(files.map(f => f -> Files.size(f)))
+        else files
+      if (smallTierOnly && merge.lengthCompare(2) < 0) return (before, before, None)
+      val kept = files.filterNot(merge.toSet)
+      val df =
+        if (kept.nonEmpty) readFiles(name, merge.map(_.toString))
+        else if (base > 0) readVersion(name, base)
+        else read(name) // never committed: the legacy external dataPath
       val n = targetFiles.getOrElse {
         val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
         (bytes / (128L << 20)).toInt.max(1)
@@ -1357,7 +1383,7 @@ final class Catalog(val spark: SparkSession, rootDir: String) {
           df.withColumn(zc, zOrderValue(df, many))
             .repartitionByRange(n, col(zc)).sortWithinPartitions(zc).drop(zc)
       }
-      done = tryCommit(name, base, clustered)
+      done = tryCommitCow(name, base, kept, Some(clustered))
       published = base + 1
     }
     // an explicit USING becomes the policy future compactions follow —
@@ -1382,7 +1408,7 @@ final class Catalog(val spark: SparkSession, rootDir: String) {
     }
     // count THIS call's published version — under a race the pointer may
     // already be on a later (fragmented) commit
-    (before, versionFiles(name, published).size, published)
+    (before, versionFiles(name, published).size, Some(published))
   }
 
   // ---- registered CDC consumer checkpoints --------------------------------
@@ -1553,6 +1579,26 @@ object Catalog {
   /** Idempotency-stamp file name inside a version directory (leading
     * underscore: parquet readers skip it, like `_SUCCESS`). */
   val TxnMarker = "_graft_txn"
+
+  /** The auto-OPTIMIZE merge set: the small-file tier of `files` (each
+    * paired with its size). Sorted by size ascending, it is the longest
+    * prefix in which each file is no larger than twice all smaller files
+    * combined; the first file always joins. A file that fails the test
+    * outweighs the whole tier below it, so it and every larger file stay
+    * settled. This is the size-tiered form of the logarithmic method: a
+    * row is rewritten only when its file grows by half again, so
+    * amortized O(log n) rewrites per row, and the running total of
+    * settled sizes at least triples per file, so O(log n) live files.
+    * The factor 2 (not 1) keeps near-equal files merging: parquet sizes
+    * of files with the same row count differ by a few bytes, and a strict
+    * `≤ sum` rule would then stop at the second file and never merge.
+    */
+  def smallTier[F](files: Seq[(F, Long)]): Seq[F] = {
+    val sorted = files.sortBy(_._2).toIndexedSeq
+    val smaller = sorted.scanLeft(0L)(_ + _._2) // bytes of all smaller files
+    sorted.indices.takeWhile(i => i == 0 || sorted(i)._2 <= 2 * smaller(i))
+      .map(sorted(_)._1)
+  }
 
   /** A multi-container commit failed BEFORE its manifest rename: nothing
     * is visible, and the caller owns the cleanup of its live-pid claims

@@ -55,8 +55,12 @@ final case class Settings(
     /** graft extension: auto-compact a container every N commits (0 =
       * off). File-granular COW appends a small parquet part per commit;
       * without periodic OPTIMIZE a long-running ingest fragments into
-      * floor-cost file counts. The reference has no analogue (it rewrites
-      * whole-container state per commit — compaction is implicit). */
+      * floor-cost file counts. The auto pass merges only the small-file
+      * tier (`Catalog.smallTier`) and hard-links the large settled files,
+      * so it never rewrites the whole container; an explicit OPTIMIZE
+      * rewrites every file and reclaims dropped-column bytes. The
+      * reference has no analogue (it rewrites whole-container state per
+      * commit — compaction is implicit). */
     optimizeAfterCommits: Int = 0,
     /** graft extension: re-ANALYZE a container every N commits (0 = off)
       * so the persisted stats feeding access-path choice (the value-index

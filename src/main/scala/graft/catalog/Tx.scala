@@ -1,6 +1,6 @@
 package graft.catalog
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
 
 /** Transaction layer: per-container staged-operation log with
@@ -39,10 +39,12 @@ final class Tx(catalog: Catalog) {
   @volatile var autoCommit: Boolean = false
 
   /** `optimize_after_commits` settings knob (graft extension): when > 0,
-    * every Nth committed version triggers [[Catalog.optimize]] so a
-    * long-running small-commit ingest can't fragment into floor-cost
-    * file counts. Version numbers count commits monotonically, so the
-    * trigger needs no extra bookkeeping and fires identically across
+    * every Nth committed version triggers [[Catalog.optimize]] over the
+    * small-file tier ([[Catalog.smallTier]]) so a long-running
+    * small-commit ingest can't fragment into floor-cost file counts,
+    * while a point commit's maintenance never rewrites the large settled
+    * files. Version numbers count commits monotonically, so the trigger
+    * needs no extra bookkeeping and fires identically across
     * sessions/restarts. */
   @volatile var optimizeEvery: Int = 0
 
@@ -89,10 +91,10 @@ final class Tx(catalog: Catalog) {
     * refresh catches up). */
   @volatile var onCommit: String => Unit = _ => ()
 
-  /** Post-auto-OPTIMIZE hook `(container, publishedVersion)`: OPTIMIZE is
-    * content-neutral, so the engine fast-forwards caught-up CDC view
-    * checkpoints past the compaction version — skipping a whole-container
-    * diff that would net zero rows. */
+  /** Post-auto-OPTIMIZE hook `(container, publishedVersion)`, run only
+    * when the pass published a version: OPTIMIZE is content-neutral, so
+    * the engine fast-forwards caught-up CDC view checkpoints past the
+    * compaction version — skipping a diff that would net zero rows. */
   @volatile var onOptimize: (String, Int) => Unit = (_, _) => ()
 
   def stagedOps(container: String): Int = log(container).size
@@ -334,11 +336,13 @@ final class Tx(catalog: Catalog) {
     val committed = catalog.currentVersion(c)
     try onCommit(c)
     catch { case scala.util.control.NonFatal(_) => () }
+    // auto-OPTIMIZE merges only the small-file tier; when that is a
+    // single file it publishes nothing, and the view fast-forward must
+    // not run — on THIS commit's version it would skip the commit's CDC
+    // window for a caught-up view
     if (optimizeEvery > 0 && committed % optimizeEvery == 0)
-      try {
-        val (_, _, published) = catalog.optimize(c)
-        onOptimize(c, published)
-      } catch { case scala.util.control.NonFatal(_) => () }
+      try catalog.optimize(c, smallTierOnly = true)._3.foreach(onOptimize(c, _))
+      catch { case scala.util.control.NonFatal(_) => () }
     // stats AFTER any auto-compaction, so analyzed_version pins the
     // version readers actually see; always approx mode — the auto pass
     // is maintenance and must stay one bounded pass (no multi-distinct
@@ -431,10 +435,8 @@ final class Tx(catalog: Catalog) {
 
     val baseFiles = catalog.versionFiles(c, base)
     val srcPks = src.select(col(pk))
-    val touched: Set[String] = catalog.readVersionTagged(c, base)
-      .join(srcPks, Seq(pk), "left_semi")
-      .select(col("__src_file"))
-      .distinct().collect().map(_.getString(0)).toSet
+    val touched = touchedFiles(catalog.readVersionTagged(c, base)
+      .join(srcPks, Seq(pk), "left_semi"))
     val kept = baseFiles.filterNot(f => touched(f.getFileName.toString))
     // misses insert (anti-join against ALL base pks, not just touched
     // files — the pk-unique convention means a pk absent from the touched
@@ -527,10 +529,8 @@ final class Tx(catalog: Catalog) {
       keys: DataFrame): Option[Boolean] = {
     val pk = d.primaryKey
     val baseFiles = catalog.versionFiles(c, base)
-    val touched: Set[String] = catalog.readVersionTagged(c, base)
-      .join(keys, Seq(pk), "left_semi")
-      .select(col("__src_file"))
-      .distinct().collect().map(_.getString(0)).toSet
+    val touched = touchedFiles(catalog.readVersionTagged(c, base)
+      .join(keys, Seq(pk), "left_semi"))
     if (touched.isEmpty) return None
     val kept = baseFiles.filterNot(f => touched(f.getFileName.toString))
     val paths = baseFiles.filter(f => touched(f.getFileName.toString))
@@ -604,10 +604,8 @@ final class Tx(catalog: Catalog) {
     val baseFiles = catalog.versionFiles(c, base)
     val touched: Set[String] =
       if (edPreds.isEmpty || baseFiles.isEmpty) Set.empty
-      else catalog.readVersionTagged(c, base)
-        .filter(edPreds.reduce(_ || _))
-        .select(col("__src_file"))
-        .distinct().collect().map(_.getString(0)).toSet
+      else touchedFiles(catalog.readVersionTagged(c, base)
+        .filter(edPreds.reduce(_ || _)))
     val kept = baseFiles.filterNot(f => touched(f.getFileName.toString))
     val rewriteParts =
       (if (touched.nonEmpty) {
@@ -636,6 +634,19 @@ final class Tx(catalog: Catalog) {
 }
 
 object Tx {
+  /** Names of the files that `tagged` rows (a `readVersionTagged` scan,
+    * filtered to the touched rows) come from — the COW touched-file probe
+    * shared by COMMIT, MERGE ROWS and DELETE ROWS. */
+  private[catalog] def touchedFiles(tagged: DataFrame): Set[String] =
+    fileNames(tagged).collect().toSet
+
+  /** The probe's plan: names deduped per partition, then on the driver.
+    * The file count bounds the collected size, so a shuffle-backed
+    * `distinct` would only add an Exchange and a stage. */
+  private[catalog] def fileNames(tagged: DataFrame): Dataset[String] =
+    tagged.select(col("__src_file")).as(Encoders.STRING)
+      .mapPartitions((it: Iterator[String]) => it.toSet.iterator)(Encoders.STRING)
+
   sealed trait StagedOp
   final case class Insert(rows: Seq[Row]) extends StagedOp
   final case class Edit(pred: Column, sets: Seq[(String, Any)]) extends StagedOp

@@ -48,6 +48,13 @@ class VerifySessionSpec extends AnyFunSuite {
     intercept[RuntimeException](GraftSession.profileConfs("fastest"))
   }
 
+  test("core count: '*' is every available processor, other non-numbers are rejected") {
+    assert(GraftSession.coreCount("*") == Runtime.getRuntime.availableProcessors)
+    assert(GraftSession.coreCount("4") == 4)
+    Seq("auto", "", "0", "-2").foreach(c =>
+      intercept[IllegalArgumentException](GraftSession.coreCount(c)))
+  }
+
   test("timestamp + timezone contract matches the oracle") {
     assert(conf.get("spark.sql.session.timeZone") == "UTC")
     assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
